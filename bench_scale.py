@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -75,7 +76,8 @@ SCALE_LANE = [
 
 def main() -> None:
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base_sf = float(os.path.basename(src.rstrip("/")).replace("sf", "") or 0.1)
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(src.rstrip("/")))
+    base_sf = float(m.group(1)) if m else 0.1
     factor = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "10"))
 
     from clinical_data_platform_spark.session import get_spark

@@ -150,3 +150,30 @@ def iter_checkpoint(df: DataFrame) -> DataFrame:
         # the plain checkpoint is still correct — it merely keeps the
         # carried stats, so high-iteration loops re-plan more slowly.
         return ck
+
+
+# The bound of a global aggregate's result or a unique-key lookup.
+ONE_ROW = 1
+
+
+class DriverBoundExceeded(RuntimeError):
+    """A driver collect would have brought more than ``max_rows`` rows."""
+
+    def __init__(self, max_rows: int):
+        super().__init__(f"more than {max_rows} rows would reach the driver")
+        self.max_rows = max_rows
+
+
+def bounded_collect(df: DataFrame, max_rows: int, *, pandas: bool = False):
+    """The only way rows reach the driver (pinned by
+    tests/test_bounded_collect.py): one ``limit(max_rows + 1)`` fetch, so
+    the driver never holds more than ``max_rows + 1`` rows and no
+    separate count job runs. Returns the rows (a pandas frame with
+    ``pandas=True``, fetched over Arrow) when there are at most
+    ``max_rows``; otherwise raises :class:`DriverBoundExceeded`, which a
+    size-gated caller catches to fall back to its distributed path."""
+    head = df.limit(max_rows + 1)
+    rows = head.toPandas() if pandas else head.collect()
+    if len(rows) > max_rows:
+        raise DriverBoundExceeded(max_rows)
+    return rows

@@ -29,7 +29,13 @@ from itertools import combinations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..catalog import ONE_ROW, bounded_collect
+
 NUMERIC_FEATURES = ["AGE", "AE_COUNT", "SEVERE_AE_COUNT"]
+
+# Every chart groups by low-cardinality study dimensions (arm, sex, risk
+# band) or fixed bins, so none sends more rows to the driver than this.
+CHART_MAX_ROWS = 1_000
 
 
 def overview_metrics(outcomes: DataFrame) -> DataFrame:
@@ -47,9 +53,9 @@ def age_histogram(outcomes: DataFrame, nbins: int = 20) -> DataFrame:
     are computed from one min/max pass so the binning matches plotly's
     uniform-width behavior; the bin loop is a Spark expression, not a
     collect."""
-    row = outcomes.agg(
-        F.min("age").alias("lo"), F.max("age").alias("hi")
-    ).first()
+    row = bounded_collect(
+        outcomes.agg(F.min("age").alias("lo"), F.max("age").alias("hi")), ONE_ROW
+    )[0]
     lo, hi = float(row["lo"]), float(row["hi"])
     width = (hi - lo) / nbins or 1.0
     bin_idx = F.least(
@@ -116,7 +122,7 @@ def feature_correlations(features: DataFrame) -> DataFrame:
         F.round(F.corr(a, b), 6).alias(f"{a}|{b}")
         for a, b in combinations(NUMERIC_FEATURES, 2)
     ]
-    wide = features.agg(*aggs).first()
+    wide = bounded_collect(features.agg(*aggs), ONE_ROW)[0]
     rows = [(f, f, 1.0) for f in NUMERIC_FEATURES]
     for a, b in combinations(NUMERIC_FEATURES, 2):
         v = wide[f"{a}|{b}"]
@@ -154,4 +160,7 @@ def dashboard_payload(outcomes: DataFrame, features: DataFrame) -> dict:
         "feature_correlations": feature_correlations(features),
         "treatment_summary": treatment_summary(outcomes),
     }
-    return {name: [r.asDict() for r in df.collect()] for name, df in charts.items()}
+    return {
+        name: [r.asDict() for r in bounded_collect(df, CHART_MAX_ROWS)]
+        for name, df in charts.items()
+    }

@@ -26,6 +26,8 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame, Window
 
+from ..catalog import ONE_ROW, bounded_collect
+
 FEATURES = ["AGE", "AE_COUNT", "SEVERE_AE_COUNT"]
 AUC_GATE, AP_GATE = 0.65, 0.60
 
@@ -121,12 +123,15 @@ def _confusion(scored: DataFrame) -> dict:
     hit = lambda lbl, prd: F.sum(
         ((F.col("label") == lbl) & (F.col("prediction") == prd)).cast("long")
     )
-    row = scored.agg(
-        hit(0.0, 0.0).alias("tn"),
-        hit(0.0, 1.0).alias("fp"),
-        hit(1.0, 0.0).alias("fn"),
-        hit(1.0, 1.0).alias("tp"),
-    ).first()
+    row = bounded_collect(
+        scored.agg(
+            hit(0.0, 0.0).alias("tn"),
+            hit(0.0, 1.0).alias("fp"),
+            hit(1.0, 0.0).alias("fn"),
+            hit(1.0, 1.0).alias("tp"),
+        ),
+        ONE_ROW,
+    )[0]
     return {k: int(row[k]) for k in ("tn", "fp", "fn", "tp")}
 
 
@@ -152,9 +157,10 @@ def model_report(
     p_hi, r_hi, f_hi = _prf(cm["tp"], cm["fp"], cm["fn"])
     p_lo, r_lo, f_lo = _prf(cm["tn"], cm["fn"], cm["fp"])
     n_val = sum(cm.values())
-    tr_row = train_prepared.agg(
-        F.count("*").alias("n"), F.avg("label").alias("pos")
-    ).first()
+    tr_row = bounded_collect(
+        train_prepared.agg(F.count("*").alias("n"), F.avg("label").alias("pos")),
+        ONE_ROW,
+    )[0]
     lr_model = model.stages[-1]
     coefs = lr_model.coefficients.toArray().tolist()
     return {
@@ -208,14 +214,13 @@ def curve_points(scored_test: DataFrame, round_dp: int = 6) -> dict:
         )
     )
     w = Window.orderBy(F.desc("p")).rowsBetween(Window.unboundedPreceding, 0)
-    pts = (
+    pts = bounded_collect(
         by_score.select(
             "p",
             F.sum("pos").over(w).alias("ctp"),
             F.sum("neg").over(w).alias("cfp"),
-        )
-        .orderBy(F.desc("p"))
-        .collect()
+        ).orderBy(F.desc("p")),
+        10**round_dp + 1,  # distinct scores in [0, 1] at round_dp places
     )
     P = pts[-1]["ctp"] if pts else 0
     N = pts[-1]["cfp"] if pts else 0

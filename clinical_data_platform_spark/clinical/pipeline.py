@@ -18,6 +18,7 @@ import time
 
 from pyspark.sql import SparkSession
 
+from ..catalog import bounded_collect
 from ..operators import checks as C
 from . import analytics as A
 from . import marts as M
@@ -83,7 +84,10 @@ def run_demo(
 
     # 2. validate (one aggregation pass per domain; fail-fast summary)
     for domain, rules in DOMAIN_RULES.items():
-        rep = C.check_report(silver_src[domain], rules).collect()
+        rep = bounded_collect(
+            C.check_report(silver_src[domain], rules),
+            C.REPORT_ROWS_PER_RULE * len(rules),
+        )
         report["validation"][domain] = {
             r["rule"]: int(r["violations"]) for r in rep
         }

@@ -81,9 +81,10 @@ def build_report_payload(silver: dict, generated_at: str | None = None) -> dict:
     """Compute every report section from the silver SDTM tables: the
     dashboard chart payload plus the DQ check report. All Spark work
     happens here; rendering is pure string templating after."""
-    from ..operators.checks import check_report
+    from ..catalog import bounded_collect
+    from ..operators.checks import REPORT_ROWS_PER_RULE, check_report
     from . import marts
-    from .dashboard import dashboard_payload
+    from .dashboard import CHART_MAX_ROWS, dashboard_payload
     from .features import subject_level_features
     from .pipeline import DOMAIN_RULES
 
@@ -92,12 +93,14 @@ def build_report_payload(silver: dict, generated_at: str | None = None) -> dict:
     features = subject_level_features(silver["DM"], silver["AE"])
     payload = dashboard_payload(outcomes, features)
     payload["study_overview"] = [
-        r.asDict() for r in built["dim_study_overview"].collect()
+        r.asDict()
+        for r in bounded_collect(built["dim_study_overview"], CHART_MAX_ROWS)
     ]
     dq_rows: list[dict] = []
     for domain, rules in DOMAIN_RULES.items():
         if domain in silver:
-            for r in check_report(silver[domain], rules).collect():
+            report = check_report(silver[domain], rules)
+            for r in bounded_collect(report, REPORT_ROWS_PER_RULE * len(rules)):
                 dq_rows.append({"domain": domain, **r.asDict()})
     payload["dq_checks"] = dq_rows
     payload["_meta"] = {

@@ -43,6 +43,8 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..catalog import ONE_ROW, DriverBoundExceeded, bounded_collect
+
 
 END_OF_WORD = "</w>"
 
@@ -87,16 +89,9 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-#: Size gate for the r9 driver-side merge loop: below this many DISTINCT
-#: words the (word, count) table is collected and the merge loop runs in
-#: plain Python (``reference_bpe`` — the exact implementation the tests
-#: already pin the distributed trainer against), replacing ~2 Spark jobs
-#: PER MERGE with one collect. 64k words x ~16 bytes is driver-trivial,
-#: and below this size the per-merge pure-Python pass is well under the
-#: per-job scheduling floor the distributed loop pays. Above the gate
-#: (any real corpus: 1e6-1e8 distinct words at 100 TB) the distributed
-#: loop below runs unchanged — same candidate math, same
-#: (count DESC, pair ASC) tie-break, pinned equal by
+#: train_bpe_merges runs the merge loop on the driver (``reference_bpe``)
+#: for at most this many distinct words (~1 MB of (word, count) rows) and
+#: the distributed loop above it; the two paths are pinned equal by
 #: tests/test_bpe.py::test_driver_and_distributed_paths_agree.
 DRIVER_MAX_WORDS = 65536
 
@@ -106,25 +101,29 @@ def train_bpe_merges(
     text_col: str = "text",
     num_merges: int = 20,
     checkpoint_every: int = 10,
-    driver_max_words: int = DRIVER_MAX_WORDS,
 ) -> list[dict]:
     """Learn ``num_merges`` BPE merges; returns them in rank order as
     [{rank, left, right, merged, pair_count}, ...]. Bounded driver
-    state: one 1-row collect per merge (distributed path) or one
-    word-table collect (size-gated driver path, see DRIVER_MAX_WORDS)."""
+    state: one word-table collect of at most DRIVER_MAX_WORDS rows, or
+    one 1-row collect per merge on the distributed path."""
     wc = word_counts(docs, text_col).cache()
     try:
-        if wc.count() <= driver_max_words:
-            rows = [(r["word"], r["count"]) for r in wc.collect()]
-            return reference_bpe(rows, num_merges=num_merges)
-        # wc stays cached until the loop's first materialization has
-        # derived `words` from it (unpersisting earlier would re-run the
-        # corpus-scale pass); it is dropped in the outer finally.
-        words = wc.select(_to_symbols(F.col("word")).alias("syms"), "count").cache()
-        merges = _merge_loop(words, num_merges, checkpoint_every)
+        rows = bounded_collect(wc, DRIVER_MAX_WORDS)
+    except DriverBoundExceeded:
+        return bpe_merges_distributed(wc, num_merges, checkpoint_every)
     finally:
         wc.unpersist()
-    return merges
+    return reference_bpe(
+        [(r["word"], r["count"]) for r in rows], num_merges=num_merges
+    )
+
+
+def bpe_merges_distributed(
+    wc: DataFrame, num_merges: int = 20, checkpoint_every: int = 10
+) -> list[dict]:
+    """The distributed merge loop over a (word, count) table."""
+    words = wc.select(_to_symbols(F.col("word")).alias("syms"), "count").cache()
+    return _merge_loop(words, num_merges, checkpoint_every)
 
 
 def _merge_loop(
@@ -134,11 +133,11 @@ def _merge_loop(
     merges: list[dict] = []
     try:
         for rank in range(1, num_merges + 1):
-            top = (
+            top = bounded_collect(
                 _pair_counts(words)
                 .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
-                .limit(1)
-                .collect()
+                .limit(ONE_ROW),
+                ONE_ROW,
             )
             if not top:
                 break

@@ -26,6 +26,8 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..catalog import ONE_ROW, bounded_collect
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -171,6 +173,10 @@ def run_checks(df: DataFrame, rules: list[Rule]) -> DataFrame:
     return df.agg(*aggs)
 
 
+#: check_report emits at most this many rows per rule (breach + warn tier)
+REPORT_ROWS_PER_RULE = 2
+
+
 def check_report(df: DataFrame, rules: list[Rule]) -> DataFrame:
     """Long-format report {rule, violations, passed, severity} via one wide
     pass + an unpivot (stack) — still one scan of the data.
@@ -220,15 +226,16 @@ def freshness_sli(
     warn_factor) / breach. ``now`` is injected for determinism; pass
     datetime.utcnow().isoformat() in production. Returns the JSON-able
     dict the reference writes to freshness_sli.json."""
-    row = df.agg(F.max(ts_col).alias("max_ts")).collect()[0]
-    max_ts = row["max_ts"]
     now_s = F.lit(now).cast("timestamp")
-    lag_row = (
+    row = bounded_collect(
         df.agg(
-            ((now_s.cast("long") - F.max(ts_col).cast("long")) / 60.0).alias("lag_min")
-        ).collect()[0]
-    )
-    lag_min = float(lag_row["lag_min"])
+            F.max(ts_col).alias("max_ts"),
+            ((now_s.cast("long") - F.max(ts_col).cast("long")) / 60.0).alias("lag_min"),
+        ),
+        ONE_ROW,
+    )[0]
+    max_ts = row["max_ts"]
+    lag_min = float(row["lag_min"])
     if lag_min <= slo_minutes:
         status = "ok"
     elif lag_min <= slo_minutes * warn_factor:

@@ -21,6 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..catalog import ONE_ROW, DriverBoundExceeded, bounded_collect, iter_checkpoint
 from ..functions.text import fingerprint, tokens, word_shingles
 
 
@@ -481,28 +482,19 @@ def containment_pairs(
     )
 
 
-# Pair count below which connected_components solves the graph on the
-# driver (union-find over the collected pair list) instead of running the
-# distributed propagation loop. 1M pairs is ~16 MB of long pairs — the
-# same order as Spark's own autoBroadcastJoinThreshold, i.e. "small
-# enough to ship to one node" by the engine's own standard. The candidate
-# PAIR set is the heavily-pruned output of banded/df-capped generation,
-# not the corpus: at 100 TB a pair graph can exceed any driver, and then
-# the distributed loop below takes over unchanged.
+# connected_components solves graphs of at most this many pairs (~16 MB
+# of long pairs) with driver-side union-find and runs the distributed
+# propagation loop above it; the two paths are pinned equal by
+# tests/test_dedup_similarity.py::test_connected_components_paths_agree.
 _CC_LOCAL_MAX_PAIRS = 1_000_000
 
 
-def _cc_local(pairs: DataFrame) -> DataFrame:
-    """Driver-side union-find for a bounded candidate-pair graph.
-
-    Classic weighted quick-union with path halving over the Arrow-fetched
-    pair list, then each class is relabeled to its MIN member id — the
-    same (node, component=min reachable id) contract as the distributed
-    loop. O(E alpha(N)) on one core: microseconds at the scale the
-    _CC_LOCAL_MAX_PAIRS gate admits, and zero Spark jobs beyond the
-    fetch, which is what retires the per-round scheduling floor the r8
-    stall forensics measured on this operator."""
-    pdf = pairs.toPandas()
+def _cc_local(pairs: DataFrame, pdf) -> DataFrame:
+    """Driver-side union-find over ``pdf``, the Arrow-fetched rows of the
+    (src, dst) ``pairs`` frame:
+    weighted quick-union with path halving, each class relabeled to its
+    MIN member id — the (node, component=min reachable id) contract of
+    the distributed loop."""
     parent: dict = {}
 
     def find(x):
@@ -540,38 +532,35 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 20,
-    local_max_pairs: int = _CC_LOCAL_MAX_PAIRS,
 ) -> DataFrame:
     """Dedup clusters: connected components over candidate pairs.
 
-    Size-adaptive (r8 verdict item 3 — the per-round driver/scheduling
-    cost of the propagation loop was THE measured stall class of the
-    suite): the pair list is materialized once and counted; below
-    ``local_max_pairs`` the graph is solved with driver-side union-find
-    (``_cc_local``) — the same small-side escape hatch Spark's AQE applies
-    to joins — otherwise iterative min-label propagation runs
-    distributed: each round one join + one groupBy over a self-looped
-    edge table, lineage truncated with catalog.iter_checkpoint (the
-    labels state feeds joins every round — plain localCheckpoint would
-    carry multiplied sizeInBytes stats), convergence detected by the
-    strictly-decreasing sum of labels (one tiny scan of the checkpointed
-    state, replacing the old join-of-two-checkpoints changed-count whose
-    plan re-analysis dominated the r8 in-flight stall capture).
+    The pair list is materialized once and read by whichever path runs:
+    driver-side union-find (``_cc_local``) for at most
+    _CC_LOCAL_MAX_PAIRS pairs, the distributed min-label propagation
+    loop (``cc_distributed``) above.
 
     Returns (node, component) where component = min node id reachable —
     the canonical "keep" document per near-duplicate cluster.
     """
-    from ..catalog import iter_checkpoint
-
-    # materialize the candidate pairs once: the count gate and the union
-    # branches below would otherwise each re-execute the (expensive)
-    # pair-generation subtree
     pairs = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).localCheckpoint(eager=True)
-    if pairs.count() <= local_max_pairs:
-        return _cc_local(pairs)
+    try:
+        pdf = bounded_collect(pairs, _CC_LOCAL_MAX_PAIRS, pandas=True)
+    except DriverBoundExceeded:
+        return cc_distributed(pairs, max_iter)
+    return _cc_local(pairs, pdf)
 
+
+def cc_distributed(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Iterative min-label propagation over a materialized (src, dst)
+    pair frame: each round one join + one groupBy over a self-looped
+    edge table, lineage truncated with catalog.iter_checkpoint (the
+    labels state feeds joins every round — plain localCheckpoint would
+    carry multiplied sizeInBytes stats), convergence detected by the
+    strictly-decreasing sum of labels (one tiny scan of the checkpointed
+    state)."""
     sym = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -602,9 +591,9 @@ def connected_components(
         # per-node labels only ever decrease, so the total is strictly
         # decreasing until the fixed point: equal consecutive sums ==
         # converged. decimal(38,0) keeps the sum exact for any id range.
-        cur = labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).collect()[0][0]
+        cur = bounded_collect(
+            labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))), ONE_ROW
+        )[0][0]
         if cur == prev_sum:
             break
         prev_sum = cur

@@ -34,7 +34,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import table as T
+from ..catalog import ONE_ROW, bounded_collect, table as T
 from .registry import query
 
 _K = 8
@@ -69,14 +69,18 @@ def _centroids(e: DataFrame, k: int = _K) -> list[list[float]]:
     """Collect the k seed centroids, ordered by cid = vec_id in 0..k-1
     (k x dim floats — plan constants, the same driver-side footprint as
     the LSH hyperplane matrix)."""
-    rows = (
-        e.filter(F.col("vec_id") < k)
-        .select("vec_id", "embedding")
-        .collect()
+    rows = bounded_collect(
+        e.filter(F.col("vec_id") < k).select("vec_id", "embedding"), k
     )
     by_id = sorted((int(r[0]), [float(x) for x in r[1]]) for r in rows)
     assert [c for c, _ in by_id] == list(range(k)), "seed vec_ids 0..k-1"
     return [vec for _, vec in by_id]
+
+
+def _query_vec(e: DataFrame) -> list[float]:
+    """The query embedding: vec_id 0, a unique key."""
+    rows = bounded_collect(e.filter(F.col("vec_id") == 0).select("embedding"), ONE_ROW)
+    return [float(x) for x in rows[0][0]]
 
 
 def _assigned(e: DataFrame, k: int = _K) -> DataFrame:

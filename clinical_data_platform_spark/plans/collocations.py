@@ -32,7 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import fan_out_scan, table as T
+from ..catalog import DriverBoundExceeded, bounded_collect, fan_out_scan, table as T
 from ..functions.text import tokens, word_shingles
 from .corpusqc import _gram_sql, _grams, _trunc6, _TRUNC6
 from .registry import query
@@ -466,58 +466,65 @@ def dunning_g2_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SPEC_ITERS = 4
 
-# Driver-replay gate (r10): the PPMI edge table is collected and the four
-# power iterations replayed on the driver only when the graph is small
-# enough to ship to one node — same 500k-edge standard as
-# graphops._GRAPH_LOCAL_MAX_EDGES (pagerank_frame). Above it the
-# distributed mat-vec loop below runs unchanged.
+# token_spectral_centrality replays its power iterations on the driver
+# for at most this many PPMI edges and runs the distributed loop above
+# it; the two paths are pinned equal by
+# tests/test_wave50_ops.py::test_spectral_driver_and_distributed_paths_agree.
 _SPEC_LOCAL_MAX_EDGES = 500_000
 
 
 def _spec_power_driver(erows: list) -> list:
     """Driver-exact replay of the _SPEC_ITERS max-normalized power
     iterations over the collected symmetric (w1, w2, ppmi) edge list.
-    Scalar ops are the bit-exact Spark replicas (jround / jdiv); the
-    mat-vec contribution sum's float order was never pinned by the
-    distributed plan either — the per-round round(x, 12) re-sync is
-    what both engines already rely on (the pagerank_frame precedent).
+    Bit-exact twin of _spec_power_distributed: each mat-vec term floors
+    into 1e-12 int64 fixed point before the per-node sum (order-free
+    integer adds, so parallel edges and collect order cannot matter),
+    the max normalizer is exact, and the state re-syncs at 12 dp.
     Returns the final top-20 (token, loading) rows, Spark-ordered."""
-    from ..functions.driverexact import jdiv, jround
+    from ..functions.driverexact import jdiv, jfloor_long, jround
 
     nodes = sorted({w1 for w1, _, _ in erows})
     v = {nd: 1.0 for nd in nodes}
     for _ in range(_SPEC_ITERS):
-        raw: dict = {}
+        raw = {nd: 0 for nd in nodes}
         for w1, w2, p in erows:
-            raw[w1] = raw.get(w1, 0.0) + p * v[w2]
-        mx = max(raw.get(nd, 0.0) for nd in nodes)
-        v = {nd: jround(jdiv(raw.get(nd, 0.0), mx), 12) for nd in nodes}
+            raw[w1] += jfloor_long(p * v[w2] * 1e12)
+        mx = max(raw.values())
+        v = {nd: jround(jdiv(float(raw[nd]), float(mx)), 12) for nd in nodes}
     out = [(nd, jround(v[nd], 6)) for nd in nodes]
     out.sort(key=lambda r: (-r[1], r[0]))
     return out[:20]
 
 
-def _spec_power_distributed(e: DataFrame, nodes: DataFrame) -> DataFrame:
-    """The distributed mat-vec loop (pre-r10 plan, unchanged): one
-    node-keyed join + one aggregate per iteration — edge-bounded
-    shuffle, vocab-bounded state. Runs above _SPEC_LOCAL_MAX_EDGES."""
+def _spec_power_distributed(e: DataFrame) -> DataFrame:
+    """The distributed mat-vec loop over the materialized symmetric edge
+    table: one node-keyed join + one aggregate per iteration over 1e-12
+    fixed-point long terms — edge-bounded shuffle, vocab-bounded state.
+    Returns the final top-20 (token, loading) rows."""
     wall = Window.partitionBy()
+    nodes = e.select(F.col("w1").alias("node")).distinct().localCheckpoint()
     v = nodes.select("node", F.lit(1.0).alias("v"))
     for _ in range(_SPEC_ITERS):
         vr = (
             e.join(v, e.w2 == v.node)
             .groupBy("w1")
-            .agg(F.sum(F.col("ppmi") * F.col("v")).alias("raw"))
+            .agg(F.sum(F.floor(F.col("ppmi") * F.col("v") * 1e12)).alias("raw"))
         )
         v = (
             nodes.join(vr, nodes.node == vr.w1, "left")
-            .select("node", F.coalesce("raw", F.lit(0.0)).alias("raw"))
+            .select("node", F.coalesce("raw", F.lit(0)).alias("raw"))
             .select(
                 "node",
-                F.round(F.col("raw") / F.max("raw").over(wall), 12).alias("v"),
+                F.round(
+                    F.col("raw").cast("double") / F.max("raw").over(wall), 12
+                ).alias("v"),
             )
         )
-    return v
+    return (
+        v.select(F.col("node").alias("token"), F.round("v", 6).alias("loading"))
+        .orderBy(F.desc("loading"), F.asc("token"))
+        .limit(20)
+    )
 
 _SPEC_EDGES_SQL = f"""
     t AS MATERIALIZED (
@@ -679,24 +686,13 @@ def token_spectral_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s.*")
         .localCheckpoint()
     )
-    # r10: size-gated driver replay of the four power iterations (the
-    # pagerank_frame pattern): at any realistic vocabulary the PPMI
-    # graph is token-vocab-bounded, and the distributed loop was ~20
-    # jobs of join+agg+window over a KB-scale state — pure scheduling
-    # and per-iteration codegen floor. Above the gate the distributed
-    # loop runs unchanged; both paths pinned equal by
-    # tests/test_wave50_ops.py (paths-agree).
-    if e.count() <= _SPEC_LOCAL_MAX_EDGES:
-        erows = [(r["w1"], r["w2"], r["ppmi"]) for r in e.collect()]
-        return spark.createDataFrame(
-            _spec_power_driver(erows), "token string, loading double"
-        )
-    nodes = e.select(F.col("w1").alias("node")).distinct().localCheckpoint()
-    v = _spec_power_distributed(e, nodes)
-    return (
-        v.select(F.col("node").alias("token"), F.round("v", 6).alias("loading"))
-        .orderBy(F.desc("loading"), F.asc("token"))
-        .limit(20)
+    try:
+        erows = bounded_collect(e, _SPEC_LOCAL_MAX_EDGES)
+    except DriverBoundExceeded:
+        return _spec_power_distributed(e)
+    erows = [(r["w1"], r["w2"], r["ppmi"]) for r in erows]
+    return spark.createDataFrame(
+        _spec_power_driver(erows), "token string, loading double"
     )
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import table as T
+from ..catalog import DriverBoundExceeded, bounded_collect, table as T
 from ..functions.scalars import NORMAL_SF_SQL
 from ..operators.sessionize import session_summary
 from .registry import query
@@ -2484,11 +2484,12 @@ def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MKV_SQUARINGS = 6  # P^(2^6) = P^64 — far past mixing for a 5-state chain
 
-# Driver-replay gate (r10, r9 verdict item 5): collect the transition
-# matrix only when it is actually enum-like-small. 4096 cells = a 64-type
-# vocabulary's worst case, ~100 KB collected — the same "small enough to
-# ship to one node" standard as the bpe/pagerank/CC gates. Above it, the
-# distributed squaring loop below runs unchanged.
+# event_markov_stationary replays its squarings on the driver for at
+# most this many transition cells (a 64-type vocabulary's worst case,
+# ~100 KB) and runs the distributed loop above it; the two paths are
+# pinned equal by
+# tests/test_wave64_ops.py::test_markov_driver_and_distributed_paths_agree.
+# The other event-type transition tables collected below share the bound.
 _MKV_MAX_CELLS = 4096
 
 
@@ -2549,11 +2550,11 @@ def _mkv_driver_replay(crows: list) -> list:
 
 
 def _mkv_distributed(c: DataFrame) -> DataFrame:
-    """The distributed squaring loop (pre-r9 plan, unchanged): runs when
-    the transition table exceeds _MKV_MAX_CELLS. Each squaring is one
-    join + two aggregates over the |types|^2 state, coalesced to one
-    partition (the state is tiny relative to any corpus that gets here)
-    and lineage-truncated per round."""
+    """The distributed squaring loop, for transition tables above
+    _MKV_MAX_CELLS. Each squaring is one join + two aggregates over the
+    |types|^2 state, coalesced to one partition (the state is tiny
+    relative to any corpus that gets here) and lineage-truncated per
+    round."""
     rowtot = c.groupBy("cur").agg(F.sum("n").cast("long").alias("tot"))
     p = (
         c.join(rowtot, "cur")
@@ -2708,28 +2709,17 @@ def event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cur", "nxt")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    # r9 optimization: everything past the transition-count aggregate is
-    # |types|^2-bounded for an enum-like event vocabulary, so the counts
-    # are collected ONCE (they also provide the empirical marginals) and
-    # the squarings replayed on the driver with the bit-exact scalar
-    # replicas in functions/driverexact.py (the absorbing_markov_visits
-    # pattern; was 49 jobs / 2.7 s of coalesce(1)+localCheckpoint rounds).
-    # r10 (r9 verdict item 5): the collect is now SIZE-GATED like every
-    # other data-derived driver replay in the family (bpe 65536 words,
-    # pagerank 500k edges, CC 1M pairs): the transition table is counted
-    # first and collected only under _MKV_MAX_CELLS; above the gate the
-    # pre-r9 distributed squaring loop runs unchanged. Both paths are
-    # pinned equal by tests/test_matrixops.py (paths-agree).
-    c = c.localCheckpoint()  # counted, then consumed by one of two paths
-    if c.count() <= _MKV_MAX_CELLS:
-        crows = [(r["cur"], r["nxt"], r["n"]) for r in c.collect()]
-        rows = _mkv_driver_replay(crows)
-        return spark.createDataFrame(
-            rows,
-            "state string, stationary_prob double, convergence_gap double, "
-            "empirical_freq double",
-        )
-    return _mkv_distributed(c)
+    c = c.localCheckpoint()  # read by whichever path runs
+    try:
+        crows = bounded_collect(c, _MKV_MAX_CELLS)
+    except DriverBoundExceeded:
+        return _mkv_distributed(c)
+    rows = _mkv_driver_replay([(r["cur"], r["nxt"], r["n"]) for r in crows])
+    return spark.createDataFrame(
+        rows,
+        "state string, stationary_prob double, convergence_gap double, "
+        "empirical_freq double",
+    )
 
 
 # --- Wave 64: two-segment structural break (Chow) ----------------------------
@@ -3164,16 +3154,13 @@ def absorbing_markov_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cur", "nxt")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    # r9 optimization: everything past the transition-count aggregate is
-    # |types|^2-bounded, but the four doublings used to run ~45 Spark
-    # jobs of coalesce(1)+localCheckpoint rounds — pure scheduling
-    # floor. The counts are collected once and the doublings replayed on
-    # the driver with bit-exact scalar replicas (functions/driverexact.py)
-    # — same 1e-12 fixed-point floor sums, same round(x, 12) re-sync,
-    # identical trajectory pinned by the unchanged chained-CTE oracle.
+    # The |types|^2 counts are collected once and the doublings replayed
+    # on the driver with bit-exact scalar replicas
+    # (functions/driverexact.py): 1e-12 fixed-point floor sums and a
+    # round(x, 12) re-sync, as in the chained-CTE oracle.
     from ..functions.driverexact import jfloor_long, jround
 
-    crows = [(r["cur"], r["nxt"], r["n"]) for r in c.collect()]
+    crows = [(r["cur"], r["nxt"], r["n"]) for r in bounded_collect(c, _MKV_MAX_CELLS)]
     tot: dict = {}
     for cur, _, n in crows:
         tot[cur] = tot.get(cur, 0) + n
@@ -3540,19 +3527,13 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t")
     ).select("t.s", "t.d")
     cnt = tr.groupBy("s", "d").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    # r9 optimization: everything past the transition-count aggregate
-    # lives on <= (|channels|+3)^2 = 49 rows, but the five chains x four
-    # matrix squarings used to run ~100 Spark jobs of localCheckpointed
-    # 49-row joins — pure driver/scheduling floor. The counts are
-    # collected once and the squarings replayed on the driver with
-    # bit-exact replicas of the very Spark scalar expressions the
-    # distributed loop used (functions/driverexact.py): the loop was
-    # designed order-free (1e-12 fixed-point floor sums, round(x, 12)
-    # re-sync each squaring), so this is a transport change, pinned by
-    # the unchanged chained-CTE oracle at all three SFs.
+    # The (|types|+3)^2 counts are collected once and the squarings
+    # replayed on the driver with bit-exact scalar replicas
+    # (functions/driverexact.py): 1e-12 fixed-point floor sums and a
+    # round(x, 12) re-sync each squaring, as in the chained-CTE oracle.
     from ..functions.driverexact import jfloor_long, jround
 
-    crows = cnt.collect()
+    crows = bounded_collect(cnt, _MKV_MAX_CELLS)
     tot: dict = {}
     for r in crows:
         tot[r["s"]] = tot.get(r["s"], 0) + r["n"]

@@ -28,20 +28,22 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import iter_checkpoint
+from ..catalog import DriverBoundExceeded, bounded_collect, iter_checkpoint
 from ..catalog import table as T
 from .registry import query
 
 _PR_ITERS = 5
 _PR_D = 0.85  # damping
 
-# Edge count below which the iterative graph loops replay on the driver
-# (same small-side escape hatch as operators/dedup.connected_components):
-# 500k (src, dst, w, wout) rows is a few MB — well under the engine's own
-# broadcast standard — and at that size the distributed loop is pure
-# per-round scheduling floor. Above it the distributed loops run
-# unchanged.
+# pagerank_frame replays its rounds on the driver for at most this many
+# edges (a few MB of (src, dst, w) rows) and runs the distributed loop
+# above it; the two paths are pinned equal by
+# tests/test_sketch_graph.py::test_pagerank_frame_driver_and_distributed_paths_agree.
 _GRAPH_LOCAL_MAX_EDGES = 500_000
+
+# One row per ordered nation pair at most (TPC-H has 25 nations): the
+# bound of every nation-graph table collected below.
+_NATION_PAIRS = 25 * 25
 
 _EDGES_SQL = """
     e0 AS (
@@ -141,60 +143,62 @@ def pagerank_frame(
     iters: int = _PR_ITERS,
     damping: float = _PR_D,
     teleport: float = 1.0 - _PR_D,
-    local_max_edges: int = _GRAPH_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Weighted PageRank over an (src, dst, w) edge frame -> (node, r).
 
     Node set = sources with out-edges; edges restricted to dst in that
     set so rows' out-probabilities sum to 1 (no dangling mass). The edge
-    list and node table are materialized ONCE before iterating via
-    localCheckpoint — lineage truncation so each iteration's plan is
-    join+agg over the stored edges, not a re-expansion of the upstream
-    build (cf. the same pattern in operators/bpe.py for data-dependent
-    loops). Per-iteration 12-dp rounding keeps ranks engine-stable for
-    the cross-engine oracle; ``teleport`` is a separate literal (not
-    computed as 1 - damping) because ``1.0 - 0.85`` and the literal
-    ``0.15`` differ by an ulp and the oracle writes the literal."""
-    # r9 optimization: the edge table is materialized ONCE (the old
-    # shape re-executed the upstream edge build for the node set, the
-    # semi-join, and each count). Below the edge gate the whole
-    # iteration is replayed on the driver — the node set, the dst
-    # semi-join filter, and the integer out-weight sums are exact, and
-    # the per-round rank expressions are bit-exact scalar replicas
-    # (functions/driverexact.py); the contribution sum's float order was
-    # never pinned by the distributed plan either — the per-round
-    # round(x, 12) re-sync is what both engines already rely on. Above
-    # the gate (web-scale graphs) the distributed loop runs unchanged.
+    list is materialized ONCE (localCheckpoint) and read by whichever
+    path runs: the driver replay for at most _GRAPH_LOCAL_MAX_EDGES
+    edges, the distributed loop above. Per-iteration 12-dp rounding
+    keeps ranks engine-stable for the cross-engine oracle; ``teleport``
+    is a separate literal (not computed as 1 - damping) because
+    ``1.0 - 0.85`` and the literal ``0.15`` differ by an ulp and the
+    oracle writes the literal."""
     ecp = edges.localCheckpoint(eager=True)
-    if ecp.count() <= local_max_edges:
-        from ..functions.driverexact import jround
+    try:
+        rows0 = bounded_collect(ecp, _GRAPH_LOCAL_MAX_EDGES)
+    except DriverBoundExceeded:
+        return pagerank_distributed(ecp, iters, damping, teleport)
+    from ..functions.driverexact import jround
 
-        rows0 = [(r["src"], r["dst"], r["w"]) for r in ecp.collect()]
-        nlist = sorted({src for src, _, _ in rows0})
-        nset = set(nlist)
-        erows = [(s, d, w) for s, d, w in rows0 if d in nset]
-        wout: dict = {}
-        for src, _, w in erows:
-            wout[src] = wout.get(src, 0) + w
-        cnt = len(nlist)
-        r = {nd: 1.0 / cnt for nd in nlist}
-        for _ in range(iters):
-            contrib: dict = {}
-            for src, dst, w in erows:
-                contrib[dst] = contrib.get(dst, 0.0) + r[src] * float(
-                    w
-                ) / float(wout[src])
-            r = {
-                nd: jround(
-                    teleport / cnt + damping * contrib.get(nd, 0.0), 12
-                )
-                for nd in nlist
-            }
-        t = edges.schema["src"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            [(nd, r[nd]) for nd in nlist], f"node {t}, r double"
-        )
+    # The node set, dst filter and integer out-weights are exact; the
+    # rank expressions are bit-exact scalar replicas, and the per-round
+    # round(x, 12) absorbs the contribution sum's float order.
+    rows0 = [(r["src"], r["dst"], r["w"]) for r in rows0]
+    nlist = sorted({src for src, _, _ in rows0})
+    nset = set(nlist)
+    erows = [(s, d, w) for s, d, w in rows0 if d in nset]
+    wout: dict = {}
+    for src, _, w in erows:
+        wout[src] = wout.get(src, 0) + w
+    cnt = len(nlist)
+    r = {nd: 1.0 / cnt for nd in nlist}
+    for _ in range(iters):
+        contrib: dict = {}
+        for src, dst, w in erows:
+            contrib[dst] = contrib.get(dst, 0.0) + r[src] * float(
+                w
+            ) / float(wout[src])
+        r = {
+            nd: jround(teleport / cnt + damping * contrib.get(nd, 0.0), 12)
+            for nd in nlist
+        }
+    t = edges.schema["src"].dataType.simpleString()
+    return edges.sparkSession.createDataFrame(
+        [(nd, r[nd]) for nd in nlist], f"node {t}, r double"
+    )
 
+
+def pagerank_distributed(
+    ecp: DataFrame,
+    iters: int = _PR_ITERS,
+    damping: float = _PR_D,
+    teleport: float = 1.0 - _PR_D,
+) -> DataFrame:
+    """pagerank_frame's distributed loop over a materialized edge frame:
+    one node-keyed join + one groupBy(dst) per iteration, rank state
+    lineage-truncated with iter_checkpoint."""
     nodes = (
         ecp.select(F.col("src").alias("node")).distinct().localCheckpoint()
     )
@@ -960,16 +964,12 @@ def trade_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    # r9 optimization: the edge table is |nations|^2-bounded BY
-    # CONSTRUCTION, so the a/h rounds replay on the driver with bit-exact
-    # scalar replicas (functions/driverexact.py) — the distributed loop
-    # was ~50 jobs of 25-row join+window rounds, pure scheduling floor.
-    # Max normalizer and round(x, 12) re-sync are unchanged; the raw
-    # score sums' float order was never pinned by the distributed plan
-    # either (that is exactly what the per-round round-12 absorbs).
+    # The a/h rounds replay on the driver with bit-exact scalar replicas
+    # (functions/driverexact.py); the per-round round(x, 12) absorbs the
+    # raw score sums' float order.
     from ..functions.driverexact import jdiv, jround
 
-    erows = [(r["src"], r["dst"], r["w"]) for r in e.collect()]
+    erows = [(r["src"], r["dst"], r["w"]) for r in bounded_collect(e, _NATION_PAIRS)]
     nlist = sorted(
         {src for src, _, _ in erows} | {dst for _, dst, _ in erows}
     )
@@ -1487,17 +1487,13 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    # r9 optimization: the edge table is |nations|^2-bounded BY
-    # CONSTRUCTION (the explain-audit broadcast standard), so it is
-    # collected ONCE and the node set, dst semi-join filter, integer
-    # out-weight sums, seed argmax, and the whole 5-round walk replay on
-    # the driver with bit-exact scalar replicas
-    # (functions/driverexact.py) — the distributed loop was ~40 jobs of
-    # 25-row joins, pure scheduling floor. Same teleport literals, same
+    # The node set, dst filter, integer out-weights, seed argmax and the
+    # whole walk replay on the driver with bit-exact scalar replicas
+    # (functions/driverexact.py); same teleport literals, same
     # round(x, 12) re-sync.
     from ..functions.driverexact import jround
 
-    rows0 = [(r["src"], r["dst"], r["w"]) for r in e0.collect()]
+    rows0 = [(r["src"], r["dst"], r["w"]) for r in bounded_collect(e0, _NATION_PAIRS)]
     nlist = sorted({src for src, _, _ in rows0})
     nset = set(nlist)
     erows = [(src, dst, w) for src, dst, w in rows0 if dst in nset]
@@ -1646,18 +1642,13 @@ def bradley_terry_trade_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("src").alias("i"), F.col("dst").alias("j"))
         .agg(F.count(F.lit(1)).cast("long").alias("wins"))
     )
-    # r9 optimization: the pair table is |nations|^2-bounded BY
-    # CONSTRUCTION, so Hunter's MM rounds replay on the driver with
-    # bit-exact scalar replicas (functions/driverexact.py) — the
-    # distributed loop was ~60 jobs of coalesce(1)+localCheckpoint
-    # rounds over a <= 600-row state, pure scheduling floor. Every MM
-    # denominator term floors into 1e-9 int64 fixed point (order-free
-    # integer sums), the normalizer is a max, and the state re-syncs at
-    # 12 dp — identical trajectory, pinned by the unchanged chained-CTE
-    # oracle at all three SFs.
+    # Hunter's MM rounds replay on the driver with bit-exact scalar
+    # replicas (functions/driverexact.py): every denominator term floors
+    # into 1e-9 int64 fixed point (order-free integer sums), the
+    # normalizer is a max, and the state re-syncs at 12 dp.
     from ..functions.driverexact import jfloor_long, jround
 
-    wrows = [(r["i"], r["j"], r["wins"]) for r in w.collect()]
+    wrows = [(r["i"], r["j"], r["wins"]) for r in bounded_collect(w, _NATION_PAIRS)]
     wmap = {(i, j): wins for i, j, wins in wrows}
     prs = [
         (i, j, wins + wmap.get((j, i), 0)) for i, j, wins in wrows

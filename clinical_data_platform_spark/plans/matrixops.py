@@ -29,7 +29,7 @@ import hashlib
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import table as T
+from ..catalog import bounded_collect, table as T
 from ..operators.linalg import covariance_long
 from .registry import query
 
@@ -263,23 +263,17 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     ut = covariance_long(e, "embedding", _DIM).select(
         "i", "j", F.round("cov", 7).alias("m")
     )
-    # r9 optimization: the eight squarings live on a dim^2 = 4,096-row
-    # state, but the distributed loop ran ~75 Spark jobs of
-    # coalesce(1)+localCheckpoint rounds — pure scheduling floor. The
-    # 7-dp-rounded covariance (the cross-engine contract the base
-    # operator proves) is collected once and the squarings replayed on
-    # the driver: every matmul term is floored into 1e-12 fixed-point
-    # int64 BEFORE the row sums exactly as the Spark expressions did
-    # (dense float64 numpy ops are the same IEEE binary64 multiply/
-    # floor; integer sums are exact), each squaring renormalizes by the
-    # integer max and re-syncs through the HALF_UP round replica
-    # (functions/driverexact.py). Identical trajectory, pinned by the
-    # unchanged chained-CTE oracle at all three SFs.
+    # The 7-dp-rounded covariance (dim^2 cells) is collected once and the
+    # squarings replayed on the driver: every matmul term is floored into
+    # 1e-12 fixed-point int64 before the row sums (dense float64 numpy
+    # ops are the same IEEE binary64 multiply/floor; integer sums are
+    # exact), each squaring renormalizes by the integer max and re-syncs
+    # through the HALF_UP round replica (functions/driverexact.py).
     import numpy as np
 
     from ..functions.driverexact import jround
 
-    urows = ut.collect()
+    urows = bounded_collect(ut, _DIM * _DIM)
     dims = sorted({r["i"] for r in urows} | {r["j"] for r in urows})
     nd = len(dims)
     pos = {d: k for k, d in enumerate(dims)}

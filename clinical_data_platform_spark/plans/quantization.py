@@ -48,8 +48,8 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import table as T
-from .clustering import _ASSIGN_CTE, _centroids
+from ..catalog import bounded_collect, table as T
+from .clustering import _ASSIGN_CTE, _centroids, _query_vec
 from .registry import query
 
 _DIM = 64
@@ -202,11 +202,6 @@ def _encoded(e: DataFrame, cents: list[list[float]]) -> DataFrame:
     return e.filter(F.col("vec_id") >= _K).select(
         "vec_id", *[_best_code(m, cents).alias(f"b{m}") for m in range(_M)]
     )
-
-
-def _query_vec(e: DataFrame) -> list[float]:
-    row = e.filter(F.col("vec_id") == 0).select("embedding").first()
-    return [float(x) for x in row[0]]
 
 
 def _adc_lut(qvec: list[float], cents: list[list[float]]) -> list[list[float]]:
@@ -683,10 +678,10 @@ def ivf_pq_residual_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         return best[1]
 
     # residual codebook: residuals of vec_id 16..31 w.r.t. their own cells
-    seed_rows = (
+    seed_rows = bounded_collect(
         e.filter((F.col("vec_id") >= _RK_LO) & (F.col("vec_id") < _RK_HI))
-        .select("vec_id", "embedding")
-        .collect()
+        .select("vec_id", "embedding"),
+        _RK_HI - _RK_LO,
     )
     seeds = sorted((int(r[0]), [float(x) for x in r[1]]) for r in seed_rows)
     assert [k for k, _ in seeds] == list(range(_RK_LO, _RK_HI))

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import fan_out_scan, table as T
+from ..catalog import ONE_ROW, bounded_collect, fan_out_scan, table as T
 from ..functions.driverexact import jround
 from ..functions.scalars import (
     NORMAL_SF_SQL,
@@ -2201,7 +2201,7 @@ def logreg_gd_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x2"
         )
         p = 1.0 / (1.0 + F.exp(-z))
-        r = d.agg(
+        step = d.agg(
             F.count(F.lit(1)).cast("double").alias("n"),
             F.round(F.sum(p - F.col("y")), 8).alias("g0"),
             F.round(F.sum((p - F.col("y")) * F.col("x1")), 8).alias("g1"),
@@ -2222,7 +2222,8 @@ def logreg_gd_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 / 1e8
             ).alias("loss"),
-        ).collect()[0]
+        )
+        r = bounded_collect(step, ONE_ROW)[0]
         out.append((k, w[0], w[1], w[2], r["loss"]))
         if k < _GD_ITERS:
             # Driver-exact weight step (r9 optimization): the update is

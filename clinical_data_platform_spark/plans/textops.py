@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import fan_out_scan, table as T
+from ..catalog import bounded_collect, fan_out_scan, table as T
 from ..functions.text import (
     STOPWORDS,
     fingerprint,
@@ -1898,6 +1898,20 @@ _RM3_FB_DOCS = 10  # feedback depth
 _RM3_EXP_TERMS = 5  # expansion terms kept
 
 
+def _rm3_doc_lengths(docs: DataFrame, post: DataFrame) -> DataFrame:
+    """(doc_id, doclen) from the (doc_id, tok, tf) posting table: sum(tf)
+    == size(tokens(text)), so the corpus is tokenized once. Every doc
+    keeps its row: empty text (no postings) has doclen 0, NULL text has
+    a NULL doclen, which avg() leaves out of avgdl — size(NULL) and the
+    oracle's len(NULL) semantics."""
+    return docs.select("doc_id", "text").join(
+        post.groupBy("doc_id").agg(F.sum("tf").alias("dsum")), "doc_id", "left"
+    ).select(
+        "doc_id",
+        F.when(F.col("text").isNotNull(), F.coalesce("dsum", F.lit(0))).alias("doclen"),
+    )
+
+
 @query(
     "rm3_query_expansion",
     oracle=f"""
@@ -2007,26 +2021,7 @@ def rm3_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
         .localCheckpoint()  # feeds base scorer, df guard, RM1, rescorer
     )
-    # r10 (r9 verdict item 3): doclen derives from the posting table —
-    # sum(tf) over a doc's postings == size(ws) exactly (tokens() emits
-    # no empty tokens) — so the corpus is tokenized ONCE instead of
-    # twice. Empty-text docs have no posting rows (tokens() maps '' to
-    # an EMPTY array), so a bare aggregate would silently drop them
-    # from n_docs/avgdl; the left join from the full doc-id list (a
-    # column-pruned scan, no tokenize) + coalesce(.., 0) keeps them —
-    # the semantics risk the r9 session correctly declined is closed,
-    # not waved away.
-    dl = (
-        T(spark, sf_dir, "documents")
-        .select("doc_id")
-        .join(
-            post.groupBy("doc_id").agg(F.sum("tf").alias("dsum")),
-            "doc_id",
-            "left",
-        )
-        .select("doc_id", F.coalesce("dsum", F.lit(0)).alias("doclen"))
-        .localCheckpoint()
-    )
+    dl = _rm3_doc_lengths(T(spark, sf_dir, "documents"), post).localCheckpoint()
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("doclen").alias("avgdl")
     )
@@ -2597,16 +2592,15 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     lam, oml = float(_MMR_LAM), float(_MMR_ONE_MINUS_LAM)
-    # r9 optimization: the greedy loop runs on a CONSTANT-size state
-    # (20 candidates, <= 190 pairwise sims) but used to submit a full
-    # orderBy+limit job per selection round plus the localCheckpoints
-    # feeding them (~50 jobs). Both tables are collected once and the 5
-    # rounds replay on the driver with the identical argmax expression
-    # (lam*nb - oml*penalty, doc_id tie-break) on the same doubles —
-    # trunc6 inputs, so bit-equality is inherited from the collected
-    # values; pinned by the unchanged chained-CTE oracle at 3 SFs.
-    cand_rows = [(r["doc_id"], r["nb"]) for r in cand.collect()]
-    sim_rows = [(r["id_a"], r["id_b"], r["j"]) for r in sims.collect()]
+    # The greedy rounds replay on the driver over the collected
+    # candidates and their pairwise sims with the identical argmax
+    # expression (lam*nb - oml*penalty, doc_id tie-break) on the same
+    # trunc6 doubles.
+    cand_rows = [(r["doc_id"], r["nb"]) for r in bounded_collect(cand, _MMR_CAND)]
+    sim_rows = [
+        (r["id_a"], r["id_b"], r["j"])
+        for r in bounded_collect(sims, _MMR_CAND * (_MMR_CAND - 1) // 2)
+    ]
     picked: list[tuple] = []
     sel_ids: list[int] = []
     remaining = dict(cand_rows)
@@ -2801,19 +2795,12 @@ def fs_em_linkage_params(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     a_, c_ = b.alias("a"), b.alias("c")
-    # r9 optimization: the agreement-pattern table has <= 8 rows BY
-    # CONSTRUCTION (a groupBy over three binary agreement bits), so the
-    # blocked pair COUNT aggregate — the only corpus-scale work — is
-    # collected once and the whole 5-round EM runs on the driver with
-    # bit-exact replicas of the very fixed-point/round-resync expressions
-    # the distributed loop used (functions/driverexact.py; the loop was
-    # designed order-free precisely so this is a pure transport change).
-    # Replaces 2 materialization jobs + 5 per-round localCheckpoint jobs
-    # with 2 collects. Same trajectory, pinned by the unchanged
-    # chained-CTE oracle at all three SFs.
-    pat_rows = [
-        (int(r["ba"]), int(r["ta"]), int(r["sa"]), int(r["n"]))
-        for r in a_.join(
+    # The blocked pair count over three binary agreement bits (<= 2^3
+    # patterns) is the only corpus-scale work: it is collected once and
+    # the EM rounds run on the driver with bit-exact replicas of the
+    # fixed-point/round-resync expressions (functions/driverexact.py).
+    pats = (
+        a_.join(
             c_,
             (F.col("a.blk") == F.col("c.blk"))
             & (F.col("a.p_partkey") < F.col("c.p_partkey")),
@@ -2825,12 +2812,15 @@ def fs_em_linkage_params(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("ba", "ta", "sa")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
+    )
+    pat_rows = [
+        (int(r["ba"]), int(r["ta"]), int(r["sa"]), int(r["n"]))
+        for r in bounded_collect(pats, 2**3)
     ]
     # the three chance-agreement u's in ONE stacked pass over part (was
     # three separate scans crossJoined): per-field value counts are
     # exact integers, so sum(c^2)/sum(c)^2 is the identical division
-    uc = (
+    uc = bounded_collect(
         p.select(
             F.explode(
                 F.array(
@@ -2853,8 +2843,8 @@ def fs_em_linkage_params(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(F.col("c") * F.col("c")).alias("sxx"),
             F.sum("c").alias("s"),
-        )
-        .collect()
+        ),
+        3,  # u1, u2, u3
     )
     us = {r["k"]: jround(jdiv(float(r["sxx"]), float(r["s"] * r["s"])), 12) for r in uc}
     lam = float(_EM_LAM0)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table as T
 from ..functions.vectors import cosine_similarity, l2_norm
+from .clustering import _query_vec
 from .registry import query
 
 _DOT_SQL = (
@@ -141,13 +142,7 @@ def lsh_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import brute_force_topk, lsh_topk_multi
 
     e = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    qvec = [
-        float(x)
-        for x in T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == 0)
-        .select("embedding")
-        .first()[0]
-    ]
+    qvec = _query_vec(T(spark, sf_dir, "embeddings"))
     exact = brute_force_topk(e, qvec, k=10)
     approx = lsh_topk_multi(e, qvec, dim=len(qvec), k=10, bits=6, n_tables=16)
     return _recall_banded_top10(exact, approx)
@@ -209,13 +204,7 @@ def ivf_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import brute_force_topk
 
     e = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    qvec = [
-        float(x)
-        for x in T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == 0)
-        .select("embedding")
-        .first()[0]
-    ]
+    qvec = _query_vec(T(spark, sf_dir, "embeddings"))
     exact = brute_force_topk(e, qvec, k=10)
     index = build_ivf_index(e, k_clusters=8)
     approx = index.search(qvec, k=10, nprobe=4)
@@ -1127,15 +1116,7 @@ def hamming_rerank_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = T(spark, sf_dir, "embeddings")
     planes = np.asarray(_slsh_signs(_HAM_PLANES), dtype=np.float64)
-    qvec = np.asarray(
-        [
-            float(x)
-            for x in e.filter(F.col("vec_id") == 0)
-            .select("embedding")
-            .first()[0]
-        ],
-        dtype=np.float64,
-    )
+    qvec = np.asarray(_query_vec(e), dtype=np.float64)
     qbits = (planes @ qvec) > 0  # 64 bools, derived from data
 
     def batches(it):

@@ -22,6 +22,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ..catalog import ONE_ROW, bounded_collect
+
 
 def dataset_bytes(path: str) -> int:
     total = 0
@@ -75,5 +77,7 @@ def analyze_table(
     if columns:
         cols = ", ".join(columns)
         spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {cols}")
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    return {r.col_name: r.data_type for r in rows if r.col_name == "Statistics"}
+    stats = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").filter(
+        "col_name = 'Statistics'"
+    )
+    return {r.col_name: r.data_type for r in bounded_collect(stats, ONE_ROW)}

@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 
 from clinical_data_platform_spark.operators.bpe import (
     END_OF_WORD,
+    bpe_merges_distributed,
     encode_with_merges,
     merges_to_df,
     reference_bpe,
@@ -20,6 +21,13 @@ from clinical_data_platform_spark.operators.bpe import (
 
 def _corpus(spark, rows):
     return spark.createDataFrame([(i, t) for i, t in enumerate(rows)], "doc_id long, text string")
+
+
+def _distributed(docs_df, num_merges):
+    """The distributed merge loop, whatever the vocabulary size (the size
+    gate routes every vocabulary in these tests to the driver path,
+    which IS reference_bpe — making an equality with it vacuous)."""
+    return bpe_merges_distributed(word_counts(docs_df), num_merges=num_merges)
 
 
 def _reference_from_df(docs_df, num_merges):
@@ -37,10 +45,7 @@ def test_trainer_matches_reference_small(spark):
             "new newer newest knew",
         ],
     )
-    # driver_max_words=0 forces the DISTRIBUTED merge loop (the size
-    # gate would otherwise route a vocabulary this small to the driver
-    # path, which IS reference_bpe — making this equality vacuous)
-    got = train_bpe_merges(docs, num_merges=20, driver_max_words=0)
+    got = _distributed(docs, 20)
     want = _reference_from_df(docs, 20)
     assert got == want
     assert len(got) == 20 and [m["rank"] for m in got] == list(range(1, 21))
@@ -50,21 +55,21 @@ def test_trainer_matches_reference_on_testdata(spark):
     from clinical_data_platform_spark.catalog import table as T
 
     docs = T(spark, "/root/testdata/sf0.001", "documents")
-    got = train_bpe_merges(docs, num_merges=8, driver_max_words=0)
+    got = _distributed(docs, 8)
     want = _reference_from_df(docs, 8)
     assert got == want
 
 
 def test_driver_and_distributed_paths_agree(spark):
-    """r9 size gate: the driver path (gate above vocab size) and the
-    distributed loop (gate forced to 0) must produce the identical merge
-    sequence on real fixture data — the same paths-agree pin the
-    size-adaptive connected_components carries."""
+    """The driver path (vocabulary under DRIVER_MAX_WORDS) and the
+    distributed loop must produce the identical merge sequence on real
+    fixture data — the same paths-agree pin the size-gated
+    connected_components carries."""
     from clinical_data_platform_spark.catalog import table as T
 
     docs = T(spark, "/root/testdata/sf0.01", "documents")
     via_driver = train_bpe_merges(docs, num_merges=12)  # gate: driver path
-    via_cluster = train_bpe_merges(docs, num_merges=12, driver_max_words=0)
+    via_cluster = _distributed(docs, 12)
     assert via_driver == via_cluster
 
 
@@ -72,9 +77,9 @@ def test_greedy_left_to_right_overlap(spark):
     # merging ("a","a") inside "a a a </w>" must produce "aa a </w>",
     # not "a aa </w>" — non-overlapping left-to-right, like greedy BPE
     docs = _corpus(spark, ["aaa aaa"])
-    # forced distributed: this test pins the regexp_replace path's
+    # the distributed path: this test pins the regexp_replace path's
     # left-to-right non-overlapping behaviour specifically
-    got = train_bpe_merges(docs, num_merges=2, driver_max_words=0)
+    got = _distributed(docs, 2)
     want = _reference_from_df(docs, 2)
     assert got == want
     assert (got[0]["left"], got[0]["right"], got[0]["pair_count"]) == ("a", "a", 4)

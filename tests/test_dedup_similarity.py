@@ -158,14 +158,15 @@ def test_connected_components_shapes(spark):
 
 
 def test_connected_components_paths_agree(spark):
-    """connected_components is size-adaptive since r9: below the
-    _CC_LOCAL_MAX_PAIRS gate it solves the pair graph with driver-side
-    union-find, above it the distributed min-label loop runs. Both must
+    """connected_components is size-gated: up to _CC_LOCAL_MAX_PAIRS
+    pairs it solves the pair graph with driver-side union-find, above it
+    the distributed min-label loop runs. Both must
     produce the identical (node, component=min reachable) table — pin
     them against each other on a graph with a long chain (diameter
     stresses the loop's convergence), a star, overlapping cliques, and
     an isolated edge; plus schema and empty-input contracts."""
     from clinical_data_platform_spark.operators.dedup import (
+        cc_distributed,
         connected_components,
     )
 
@@ -180,7 +181,7 @@ def test_connected_components_paths_agree(spark):
     }
     dist = {
         (r.node, r.component)
-        for r in connected_components(pairs, local_max_pairs=0).collect()
+        for r in cc_distributed(pairs.toDF("src", "dst")).collect()
     }
     assert local == dist and len(local) == 19
     assert {c for n, c in local if n >= 30} == {30}

@@ -363,11 +363,14 @@ def test_hits_tracks_brute_force(spark):
 
 
 def test_pagerank_frame_driver_and_distributed_paths_agree(spark):
-    """r9 size gate: pagerank_frame's driver replay (gate above the edge
-    count) and the distributed loop (gate forced to 0) must produce the
-    identical rank table on real fixture data — the same paths-agree pin
-    the size-adaptive connected_components and BPE trainer carry."""
-    from clinical_data_platform_spark.plans.graphops import pagerank_frame
+    """pagerank_frame's driver replay (the edge table is under its bound)
+    and the distributed loop must produce the identical rank table on
+    real fixture data — the same paths-agree pin the size-gated
+    connected_components and BPE trainer carry."""
+    from clinical_data_platform_spark.plans.graphops import (
+        pagerank_distributed,
+        pagerank_frame,
+    )
 
     l = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_suppkey"
@@ -405,7 +408,7 @@ def test_pagerank_frame_driver_and_distributed_paths_agree(spark):
     }
     via_cluster = {
         r["node"]: r["r"]
-        for r in pagerank_frame(edges, local_max_edges=0).collect()
+        for r in pagerank_distributed(edges.localCheckpoint()).collect()
     }
     assert via_driver == via_cluster
     assert len(via_driver) > 0

@@ -68,36 +68,49 @@ def test_spectral_recount(spark):
         assert abs(g.loading - w[1]) < 2e-6
 
 
-def test_spectral_driver_and_distributed_paths_agree(spark):
-    """The size-gated driver replay and the distributed mat-vec loop
-    must produce identical top-20 rows on the same edge table (r10; the
-    bpe/pagerank/markov gate discipline). Uses the sf0.001 PPMI edges —
-    the real data shape, including parallel symmetrized edges that the
-    join+agg sums."""
-    import pyspark.sql.functions as F
-
+def _spec_paths(spark, erows):
     from clinical_data_platform_spark.plans.collocations import (
         _spec_power_distributed,
         _spec_power_driver,
     )
 
-    sym = _edges()  # {(a, b): w} — symmetrized, parallel edges pre-summed
-    erows = [(a, b, w) for (a, b), w in sym.items()]
-    driver = _spec_power_driver(erows)
-
     e = spark.createDataFrame(erows, "w1 string, w2 string, ppmi double")
-    nodes = e.select(F.col("w1").alias("node")).distinct().localCheckpoint()
-    v = _spec_power_distributed(e.localCheckpoint(), nodes)
     dist = [
         (r.token, r.loading)
-        for r in v.select(
-            F.col("node").alias("token"), F.round("v", 6).alias("loading")
-        )
-        .orderBy(F.desc("loading"), F.asc("token"))
-        .limit(20)
-        .collect()
+        for r in _spec_power_distributed(e.localCheckpoint()).collect()
     ]
+    return _spec_power_driver(erows), dist
+
+
+def test_spectral_driver_and_distributed_paths_agree(spark):
+    """The size-gated driver replay and the distributed mat-vec loop
+    must produce identical top-20 rows on the same edge table. Uses the
+    sf0.001 PPMI edges — the real data shape."""
+    sym = _edges()  # {(a, b): w} — symmetrized, parallel edges pre-summed
+    driver, dist = _spec_paths(spark, [(a, b, w) for (a, b), w in sym.items()])
     assert dist == driver
+
+
+def test_spectral_paths_agree_on_unsummed_parallel_edges(spark):
+    """The symmetrized edge table is a multigraph: when both directions
+    of a pair pass the PPMI filter the pair appears twice, un-summed.
+    Both paths floor each term into fixed point before summing, so the
+    parallel edges and the collect order cannot split them."""
+    erows = [
+        ("a", "b", 0.1),
+        ("a", "b", 0.2),
+        ("b", "a", 0.1),
+        ("b", "a", 0.2),
+        ("a", "c", 1.7),
+        ("c", "a", 1.7),
+        ("b", "c", 0.3),
+        ("c", "b", 0.3),
+        ("c", "b", 0.7),
+        ("b", "c", 0.7),
+    ]
+    driver, dist = _spec_paths(spark, erows)
+    assert dist == driver and len(driver) == 3
+    assert driver == _spec_paths(spark, erows[::-1])[0]
 
 
 def test_spectral_loadings_in_unit_interval(spark):

@@ -124,3 +124,26 @@ def test_rm3_expansion_changes_candidates(spark):
     assert any(r == 0 for r in originals) or originals != sorted(
         [r for r in originals if r > 0]
     )
+
+
+def test_rm3_doc_lengths_null_and_empty_text(spark):
+    """A NULL-text document keeps its row with a NULL doclen, so avg()
+    leaves it out of avgdl (the oracle's len(NULL)); an empty-text
+    document has no postings and a doclen of 0, which avgdl counts."""
+    import pyspark.sql.functions as F
+
+    from clinical_data_platform_spark.functions.text import tokens
+    from clinical_data_platform_spark.plans.textops import _rm3_doc_lengths
+
+    docs = spark.createDataFrame(
+        [(1, "a b a"), (2, None), (3, ""), (4, "c")], "doc_id long, text string"
+    )
+    post = (
+        docs.select("doc_id", F.explode(tokens(F.lower("text"))).alias("tok"))
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    dl = _rm3_doc_lengths(docs, post)
+    assert {r.doc_id: r.doclen for r in dl.collect()} == {1: 3, 2: None, 3: 0, 4: 1}
+    stats = dl.agg(F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avgdl")).first()
+    assert (stats.n, stats.avgdl) == (4, 4 / 3)

@@ -44,13 +44,16 @@ spark.stop()
 
 def probe(name: str, sf: str) -> dict | None:
     code = _CHILD.format(here=HERE, sf=sf, name=name)
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
+    try:
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True,
+            text=True,
+            timeout=600,
+            cwd=HERE,
+        )
+    except subprocess.TimeoutExpired:
+        return {"name": name, "error": "timeout after 600 s"}
     for line in reversed(out.stdout.strip().splitlines()):
         try:
             return json.loads(line)
@@ -67,12 +70,10 @@ def main() -> None:
     args = ap.parse_args()
     summary = {}
     for name in args.names:
-        rec = probe(name, args.sf)
-        if rec is None:
-            print(json.dumps({"name": name, "error": "child failed"}), flush=True)
-            continue
+        rec = probe(name, args.sf) or {"name": name, "error": "child failed"}
         print(json.dumps(rec), flush=True)
-        summary[name] = rec
+        if "error" not in rec:
+            summary[name] = rec
     print(
         json.dumps(
             {
